@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Driver-run benchmark: one JSON line with per-query wall times.
   * A warmup query absorbs JVM/codegen/IO warm-up so per-query numbers
   * are comparable; queries run in name order for stable attribution.
@@ -29,23 +28,24 @@ object Bench {
     * pressured rep among a now-larger clean majority stops being the
     * middle value. Queries under `floorSec` are never rescued: at that
     * scale a 2x is milliseconds of scheduler noise, not a signal.
+    * A rep returns None when the query threw: it is left out of the
+    * median, and a query with no successful rep has no median (None).
     * Returns (median, extraRepsRun). The estimator stays an honest
     * median over everything observed — never a min, never a trimmed
     * subset — so a genuinely slow query cannot rescue itself into a
     * fast number. */
   def measureWithRescue(
-      baseReps: Int, run: () => Double, fresh: Option[Double],
-      maxExtra: Int = 2, floorSec: Double = 0.25): (Double, Int) = {
+      baseReps: Int, run: () => Option[Double], fresh: Option[Double],
+      maxExtra: Int = 2, floorSec: Double = 0.25): (Option[Double], Int) = {
     val times = scala.collection.mutable.ArrayBuffer.empty[Double]
-    (1 to baseReps).foreach(_ => times += run())
-    def med = median(times.toSeq)
-    def pressured: Boolean = {
-      val m = med
+    (1 to baseReps).foreach(_ => times ++= run())
+    def med = if (times.isEmpty) None else Some(median(times.toSeq))
+    def pressured: Boolean = med.exists { m =>
       m >= floorSec &&
         (m > 2.0 * times.min || fresh.exists(f => m > 2.0 * f))
     }
     var extra = 0
-    while (extra < maxExtra && pressured) { times += run(); extra += 1 }
+    while (extra < maxExtra && pressured) { times ++= run(); extra += 1 }
     (med, extra)
   }
 
@@ -76,37 +76,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // backstop for anything Stage.drain can't see (e.g. shuffle
-      // files of dead stages): force a periodic driver GC so the
-      // ContextCleaner actually runs during a long shared-JVM bench
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // Spark 4.1's checkpoint file-checksum writes a sibling .checksum
-      // file for EVERY offset/commit/state file — doubling the tiny-file
-      // count of every micro-batch (8 state partitions x ~3 files x
-      // N batches x 2 passes per gate). The stream gates here run on
-      // one-shot throwaway checkpoints where corruption detection buys
-      // nothing; a deployment with durable checkpoints can re-enable it.
-      // Correctness-neutral (pure I/O integrity feature); measured ~5-12%
-      // off the stateful streaming gates (OPTIMIZATION_r11.md).
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // Hadoop's default `file:` filesystem is ChecksumFileSystem: every
-      // task output file gets a sibling .crc written on write and
-      // VERIFIED on read-back. The stream gates' foreachBatch landings
-      // are write-once scratch handoffs on local disk, re-read once in
-      // the same process — the checksum layer doubles their tiny-file
-      // count and re-hashes every byte both ways (round-12 A/B:
-      // ws10 7.3→3.7 s, ws05 3.9→2.5 s, ws04 7.4→5.8 s). Same class as
-      // the streaming checkpoint-checksum disable above: local-scratch
-      // I/O integrity, not results; HDFS/S3 deployments never use this
-      // FS and keep their own integrity layers.
-      .config("spark.hadoop.fs.file.impl",
-        "graft.hadoop.NoChecksumLocalFileSystem")
-      .getOrCreate()
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warmup: touch every table + exercise codegen/shuffle machinery
     Tables.names.foreach { t =>
@@ -124,10 +94,17 @@ object Bench {
     val fresh = freshMedians()
     var rescued = 0
     var extraReps = 0
-    val results = selected.map { case (name, fn) =>
-      val rep: () => Double = () => {
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    val results = selected.flatMap { case (name, fn) =>
+      val rep: () => Option[Double] = () => {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e")
+            failed(name) = failed.getOrElse(name, 0) + 1
+            false
+          }
         val dt = (System.nanoTime() - t0) / 1e9
         // unload state-store providers between runs (outside the
         // timer): every stream-loop query runs on a one-shot checkpoint,
@@ -142,11 +119,13 @@ object Bench {
         // storage pool, the round-6 adjudicated mechanism for a 6×
         // recorded blowup on the heaviest staged queries
         graft.operators.Stage.drain(spark)
-        dt
+        Option.when(ok)(dt)
       }
       val (med, extra) = measureWithRescue(reps, rep, fresh.get(name))
       if (extra > 0) { rescued += 1; extraReps += extra }
-      name -> med
+      // a query with no successful rep has no time: it is left out of
+      // `queries` and `total` and shows up only in `failed`
+      med.map(name -> _)
     }
     // self-annotation: queries whose post-rescue median still sits
     // > 2x the committed fresh reference, so the recording explains
@@ -172,8 +151,11 @@ object Bench {
         "\"" + k + "\":{\"t\":" + num(t) + ",\"fresh\":" + num(f) + "}"
       }.mkString("{", ",", "}")
       val total = num(rs.map(_._2).sum)
+      val fails = failed.map { case (k, n) => "\"" + k + "\":" + n }
+        .mkString("{", ",", "}")
       s"""{"metric":"total","value":$total,"unit":"sec","rescued":$rescued,""" +
-        s""""extra_reps":$extraReps,"pressured":$press,"queries":$qs,""" +
+        s""""extra_reps":$extraReps,"pressured":$press,"failed":$fails,""" +
+        s""""queries":$qs,""" +
         s""""sf":"$sfDir"}"""
     }
     println(jsonLine(results.sortBy(_._2)))

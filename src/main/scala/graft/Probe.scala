@@ -21,18 +21,12 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // match Bench's session config so probe timings are comparable
-      // (env knob so a before/after A/B can restore the old default)
+    val spark = Sessions.builder(cpus)
+      // A/B knobs over the Bench config (before/after runs can restore
+      // the old defaults): the streaming checkpoint checksum and the
+      // Hadoop local-FS checksum layer
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
         sys.env.getOrElse("SPARK_GRAFT_PROBE_CHECKSUM", "false"))
-      // A/B knob for the Hadoop local-FS checksum layer; default
-      // matches Bench (raw — see Bench.scala)
       .config("spark.hadoop.fs.file.impl",
         sys.env.getOrElse("SPARK_GRAFT_PROBE_FILE_IMPL",
           "graft.hadoop.NoChecksumLocalFileSystem"))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,20 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: no checksum siblings for one-shot stream-gate
-      // checkpoints (see Bench.scala) — keeps the verified config
-      // identical to the benched one
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // raw local FS, matching Bench (see Bench.scala — the verified
-      // config stays identical to the benched one)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.hadoop.NoChecksumLocalFileSystem")
-      .getOrCreate()
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -2,7 +2,9 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.operators.MessageOps
+import graft.streaming.{BatchLanding, StreamGate}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Batch-expressible forms of the reference's message operators
@@ -160,12 +162,7 @@ object MessageQueries {
       val root = graft.TempRoots.create("graft-infer")
       graft.sources.TopicStore.publish(s,
         MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
-      val consumed = s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      val consumed = StreamGate.batch(s, root, "events", 1000000L).load()
       val schemas = MessageOps.inferPayloadSchemas(s, consumed,
         samplePerType = 200, xmlRowTag = "e")
       MessageOps.contentTypeDispatchInferred(consumed, schemas)
@@ -208,10 +205,7 @@ object MessageQueries {
         MessageOps.fromEvents(ev.filter(col("event_type") =!= "click")),
         root, "ev-other", 4)
       s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicsPattern", "ev-.*")
-        .option("batchingMaxMessages", "1000000")
+        .options(StreamGate.patternOptions(root, "ev-.*", 1000000L))
         .load()
         .select(col("topic"), col("message_id"), col("key"))
         .orderBy(col("message_id"))
@@ -247,17 +241,9 @@ object MessageQueries {
       MessageOps.fromEvents(Tables(s, dir, "events"))
         .write.format("pulsarlike")
         .mode("append") // publish appends to the topic (the only sane producer mode)
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "relayed")
-        .option("batchingMaxMessages", "1000000")
+        .options(StreamGate.topicOptions(root, "relayed", 1000000L))
         .save()
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "relayed")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      StreamGate.batch(s, root, "relayed", 1000000L).load()
         .select(col("message_id"), col("key"), col("publish_time"),
           col("event_time"), col("redelivery_count"), col("content_type"))
         .orderBy(col("message_id"))
@@ -307,37 +293,21 @@ object MessageQueries {
       val hopInLines = (0 until 4).map(p =>
         graft.sources.TopicStore.partitionMeta(root, "hop-in", p)._1).sum
       val epochCap = math.max(4000L, hopInLines / 4 + 1)
-      def runPass(): Unit = {
-        val q = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "hop-in")
-          .option("subscriptionInitialPosition", "Earliest")
-          .option("batchingMaxMessages", epochCap.toString)
-          .load()
+      def runPass(): Unit =
+        StreamGate.await(StreamGate.stream(s, root, "hop-in", epochCap).load()
           // the transform leg: drop text/plain (pushed to the source scan)
           .filter(col("content_type") =!= "text/plain")
           .writeStream
           .format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "hop-out")
+          .options(StreamGate.topicOptions(root, "hop-out", epochCap))
           .option("enableTransaction", "true")
-          .option("batchingMaxMessages", epochCap.toString)
           .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .trigger(Trigger.AvailableNow())
+          .start(), ckpt)
       runPass()
       graft.streaming.StreamReplay.forceLastEpochReplay(ckpt)
       runPass()
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "hop-out")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      StreamGate.batch(s, root, "hop-out", 1000000L).load()
         .select(col("message_id"), col("key"), col("publish_time"),
           col("event_time"), col("redelivery_count"), col("content_type"))
         .orderBy(col("message_id"))
@@ -365,7 +335,6 @@ object MessageQueries {
         |FROM events
         |ORDER BY message_id""".stripMargin
     ) { (s, dir) =>
-      import graft.streaming.BatchLanding
       val root = graft.TempRoots.create("graft-roundtrip")
       val ckptRelay = root + "/ckpt-relay"
       val ckptDown = root + "/ckpt-down"
@@ -384,43 +353,21 @@ object MessageQueries {
         graft.sources.TopicStore.partitionMeta(root, "hop-in", p)._1).sum
       val legCap = math.max(20000L, hopInLines / 3 + 1)
       // leg 1: subscription "sub-relay" consumes hop-in, produces hop-out
-      val relay = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "hop-in")
+      StreamGate.await(StreamGate.stream(s, root, "hop-in", legCap)
         .option("subscriptionName", "sub-relay")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", legCap.toString)
         .load()
         .writeStream
         .format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "hop-out")
+        .options(StreamGate.topicOptions(root, "hop-out", legCap))
         .option("enableTransaction", "true")
-        .option("batchingMaxMessages", legCap.toString)
         .option("checkpointLocation", ckptRelay)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      relay.awaitTermination()
+        .trigger(Trigger.AvailableNow())
+        .start(), ckptRelay)
       // leg 2: a FRESH subscription consumes the produced topic
-      val down = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "hop-out")
-        .option("subscriptionName", "sub-down")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", legCap.toString)
-        .load()
-        .writeStream
-        .option("checkpointLocation", ckptDown)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-          BatchLanding.land(df, outDir, bid)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      down.awaitTermination()
+      StreamGate.land(StreamGate.stream(s, root, "hop-out", legCap)
+          .option("subscriptionName", "sub-down")
+          .load(),
+        ckptDown, outDir)
       BatchLanding.read(s, outDir)
         .select(col("message_id"), col("key"), col("publish_time"),
           col("redelivery_count"), col("content_type"))

@@ -642,7 +642,7 @@ object SimilarityQueries {
         |SELECT vec_id, pivot_id AS cell_id FROM af
         |ORDER BY vec_id""".stripMargin
     ) { (s, dir) =>
-      import graft.streaming.BatchLanding
+      import graft.streaming.{BatchLanding, StreamGate}
       import graft.sources.TopicStore
       val root = graft.TempRoots.create("graft-incann")
       val ckpt = graft.TempRoots.create("graft-incann-ckpt")
@@ -665,13 +665,7 @@ object SimilarityQueries {
             .as("value_str"),
           lit(new java.sql.Timestamp(1700000000000L)).as("publish_time")),
         root, "fresh-vectors", 4)
-      val q = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "fresh-vectors")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      val q = StreamGate.stream(s, root, "fresh-vectors", 1000000L).load()
         .select(col("key").cast("long").as("vec_id"),
           transform(split(col("value_str"), ","), x => x.cast("double"))
             .as("v"))
@@ -679,15 +673,9 @@ object SimilarityQueries {
       val routed = VectorOps.assignCellsAuto(q, centroids, nprobe = 1,
           normCol = Some("nv"))
         .select(col("vec_id"), col("pivot_id").as("cell_id"))
-      val stream = routed.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-          BatchLanding.land(df.select("vec_id", "cell_id"), outDir, bid)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      stream.awaitTermination()
+      StreamGate.run(routed, ckpt) { (df, bid) =>
+        BatchLanding.land(df.select("vec_id", "cell_id"), outDir, bid)
+      }
       staticAssigned.unionByName(BatchLanding.read(s, outDir))
         .orderBy(col("vec_id"))
     },

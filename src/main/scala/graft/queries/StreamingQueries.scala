@@ -3,9 +3,8 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.operators.MessageOps
 import graft.sources.TopicStore
-import graft.streaming.BatchLanding
+import graft.streaming.{BatchLanding, StreamGate}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming surface under the oracle gate:
@@ -22,6 +21,13 @@ import org.apache.spark.sql.types._
   *    by specs; the aggregation semantics verified here are identical.
   */
 object StreamingQueries {
+
+  /** Admission cap of the sentinel-choreography gates. One batch per
+    * pass is their determinism contract: a pass that splits would run
+    * its tail batch under the sentinel-advanced watermark and silently
+    * drop real rows. The cap must exceed any fixture size (10x soak
+    * included), so it is 1e8, not the 1e6 the plain loops use. */
+  final val SingleBatchCap = 100000000L
 
   val all: Seq[Q] = Seq(
 
@@ -46,16 +52,9 @@ object StreamingQueries {
       // parse + project inside foreachBatch and land parquet
       // executor-side — the consumed topic never touches the driver
       // (the memory sink would be a driver OOM at 100× the volume)
-      val q = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "32768")
-        .load()
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
+      StreamGate.run(
+          StreamGate.stream(s, root, "events", 32768L).load(), ckpt) {
+        (df, bid) =>
           BatchLanding.land(
             MessageOps.contentTypeDispatch(df, payloadSchema)
               .filter(col("parsed").isNotNull)
@@ -65,11 +64,7 @@ object StreamingQueries {
                 col("parsed.value").as("value"),
                 col("base_type")),
             outDir, bid)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      }
       BatchLanding.read(s, outDir).orderBy(col("event_id"))
     },
 
@@ -111,31 +106,19 @@ object StreamingQueries {
       val preLines = (0 until 4).map(p =>
         TopicStore.partitionMeta(root, "events", p)._1).sum
 
-      def stream = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      def stream = StreamGate.stream(s, root, "events", 1000000L).load()
       val eid = expr("CAST(split(message_id, ':')[1] AS BIGINT)")
 
       // pass 1: every message acked except the two nacked families —
       // one store scan feeds both nack calls
-      val q1 = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          val failed = df.filter(eid % 7 <= 1).persist()
-          AckingSink.nack(s, failed.filter(eid % 7 === 0), root, "events",
-            nackDelayMs = 0L)
-          AckingSink.nack(s, failed.filter(eid % 7 === 1), root, "events",
-            nackDelayMs = 36000000L)
-          failed.unpersist()
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q1.awaitTermination()
+      StreamGate.run(stream, ckpt) { (df, _) =>
+        val failed = df.filter(eid % 7 <= 1).persist()
+        AckingSink.nack(s, failed.filter(eid % 7 === 0), root, "events",
+          nackDelayMs = 0L)
+        AckingSink.nack(s, failed.filter(eid % 7 === 1), root, "events",
+          nackDelayMs = 36000000L)
+        failed.unpersist()
+      }
       require((0 until 4).map(p =>
         TopicStore.partitionMeta(root, "events", p)._1).sum == preLines,
         "nack must not grow the main log")
@@ -144,26 +127,15 @@ object StreamingQueries {
       // Redelivered rows land as parquet executor-side (retry volume is
       // unbounded in general — a driver buffer would not scale)
       val redeliveredDir = root + "/redelivered"
-      val q2 = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-          BatchLanding.land(
-            df.select("message_id", "key", "redelivery_count"),
-            redeliveredDir, bid)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q2.awaitTermination()
+      StreamGate.run(stream, ckpt) { (df, bid) =>
+        BatchLanding.land(
+          df.select("message_id", "key", "redelivery_count"),
+          redeliveredDir, bid)
+      }
 
       val retries = BatchLanding.read(s, redeliveredDir)
         .withColumn("src", lit("retry"))
-      val dlq = s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events-dlq")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      val dlq = StreamGate.batch(s, root, "events-dlq", 1000000L).load()
         .select(col("message_id"), col("key"), col("redelivery_count"))
         .withColumn("src", lit("dlq"))
       retries.unionByName(dlq).orderBy(col("message_id"), col("src"))
@@ -206,13 +178,7 @@ object StreamingQueries {
       TopicStore.publish(s, chunks, root, "chunks", 4)
 
       val outDir = root + "/reassembled"
-      val stream = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "chunks")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      val stream = StreamGate.stream(s, root, "chunks", 1000000L).load()
       import s.implicits._
       val asChunks = stream.select(
           col("properties").getItem("uuid").as("chunk_uuid"),
@@ -227,24 +193,17 @@ object StreamingQueries {
       // hash-mismatch the oracle, which has no such bound). State
       // instances = shuffle partitions; right-sized to the bounded
       // slice (restored after the stream drains)
-      StreamHarness.withShufflePartitions(s, "8") {
-      val q = ChunkReassembly.reassemble(s, asChunks,
-          watermarkDelay = "1 second", maxChunks = 4096)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch {
+      StreamGate.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        StreamGate.run(ChunkReassembly.reassemble(s, asChunks,
+            watermarkDelay = "1 second", maxChunks = 4096), ckpt) {
           // hash + project executor-side; only (doc_id, md5) land on disk
-          (ds: org.apache.spark.sql.Dataset[ChunkReassembly.Assembled], bid: Long) =>
-          BatchLanding.land(
-            ds.select(
-              col("chunk_uuid").cast("long").as("doc_id"),
-              md5(col("payload")).as("payload_md5")),
-            outDir, bid)
-          ()
+          (ds, bid) =>
+            BatchLanding.land(
+              ds.select(
+                col("chunk_uuid").cast("long").as("doc_id"),
+                md5(col("payload")).as("payload_md5")),
+              outDir, bid)
         }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
       }
       BatchLanding.read(s, outDir).orderBy(col("doc_id"))
     },
@@ -269,12 +228,8 @@ object StreamingQueries {
       val root = graft.TempRoots.create("graft-seek")
       TopicStore.publish(s,
         MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
+      StreamGate.batch(s, root, "events", 1000000L)
         .option("startingTime", "2024-01-15T00:00:00Z")
-        .option("batchingMaxMessages", "1000000")
         .load()
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
@@ -303,13 +258,9 @@ object StreamingQueries {
       val root = graft.TempRoots.create("graft-range")
       TopicStore.publish(s,
         MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
+      StreamGate.batch(s, root, "events", 1000000L)
         .option("startingTime", "2024-01-10T00:00:00Z")
         .option("endingTime", "2024-01-20T00:00:00Z")
-        .option("batchingMaxMessages", "1000000")
         .load()
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
@@ -346,12 +297,8 @@ object StreamingQueries {
       val slice = MessageOps.fromEvents(
         Tables(s, dir, "events").filter(col("event_id") < 30000))
       TopicStore.publish(s, slice, root, "events", 1)
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
+      StreamGate.batch(s, root, "events", 1000000L)
         .option("startingMessageId", "0:500:0:0")
-        .option("batchingMaxMessages", "1000000")
         .load()
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
@@ -394,12 +341,8 @@ object StreamingQueries {
       TopicStore.ackCumulative(root, "events", "sub-default", 0, 499L)
       // …and a later cumulative ack BELOW the cursor is a no-op
       TopicStore.ackCumulative(root, "events", "sub-default", 0, 99L)
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
+      StreamGate.batch(s, root, "events", 1000000L)
         .option("startFromSubscriptionCursor", "true")
-        .option("batchingMaxMessages", "1000000")
         .load()
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
@@ -435,12 +378,8 @@ object StreamingQueries {
         TopicStore.expireMessages(root, "events", "sub-default", p,
           cutoffUs)
       }
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
+      StreamGate.batch(s, root, "events", 1000000L)
         .option("startFromSubscriptionCursor", "true")
-        .option("batchingMaxMessages", "1000000")
         .load()
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
@@ -470,11 +409,7 @@ object StreamingQueries {
         MessageOps.fromEvents(
           Tables(s, dir, "events").filter(col("event_id") < 30000)),
         root, "events", 4)
-      def reader = s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("batchingMaxMessages", "1000000")
+      def reader = StreamGate.batch(s, root, "events", 1000000L)
       val full = reader.load()
         .agg(count(lit(1)).cast("long").as("n"))
         .select(lit("full").as("slice"), col("n"))
@@ -509,11 +444,7 @@ object StreamingQueries {
         MessageOps.fromEvents(
           Tables(s, dir, "events").filter(col("event_id") < 30000)),
         root, "events", 4)
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("batchingMaxMessages", "1000000")
+      StreamGate.batch(s, root, "events", 1000000L)
         .load()
         .orderBy(col("publish_time").desc).limit(100)
         .groupBy(col("publish_time"))
@@ -551,12 +482,8 @@ object StreamingQueries {
         // …then the admin rewinds it to T for a replay
         TopicStore.resetCursor(root, "events", "sub-default", p, toUs)
       }
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
+      StreamGate.batch(s, root, "events", 1000000L)
         .option("startFromSubscriptionCursor", "true")
-        .option("batchingMaxMessages", "1000000")
         .load()
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
@@ -588,27 +515,13 @@ object StreamingQueries {
         Tables(s, dir, "events").filter(col("event_id") < 30000))
       TopicStore.publish(s, slice, root, "events", 4)
       TopicStore.publish(s, slice, root, "events", 4) // the redelivery
-      StreamHarness.withShufflePartitions(s, "8") {
-        val q = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "events")
-          .option("subscriptionInitialPosition", "Earliest")
-          .option("batchingMaxMessages", "1000000")
-          .load()
-          .withWatermark("event_time", "60 days")
-          .dropDuplicatesWithinWatermark("message_id")
-          .select(col("message_id"), col("key"), col("publish_time"))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-            BatchLanding.land(df, outDir, bid)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      StreamGate.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        StreamGate.land(
+          StreamGate.stream(s, root, "events", 1000000L).load()
+            .withWatermark("event_time", "60 days")
+            .dropDuplicatesWithinWatermark("message_id")
+            .select(col("message_id"), col("key"), col("publish_time")),
+          ckpt, outDir)
       }
       BatchLanding.read(s, outDir).orderBy(col("message_id"))
     },
@@ -715,13 +628,7 @@ object StreamingQueries {
 
       val payloadSchema = MessageOps.payloadSchema
       def side(eventType: String, idAs: String, tsAs: String) = {
-        val raw = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "events")
-          .option("subscriptionInitialPosition", "Earliest")
-          .option("batchingMaxMessages", "1000000")
-          .load()
+        val raw = StreamGate.stream(s, root, "events", 1000000L).load()
         MessageOps.contentTypeDispatch(raw, payloadSchema)
           .filter(col("parsed.event_type") === eventType)
           .select(
@@ -734,25 +641,17 @@ object StreamingQueries {
       // partitions (4 stores per partition); right-size them to the
       // bounded slice this query processes — a cluster deployment
       // sizes this to its core count instead
-      StreamHarness.withShufflePartitions(s, "8") {
-      val clicks = side("click", "click_id", "click_ts")
-      val buys = side("purchase", "buy_id", "buy_ts")
-      val q = clicks.join(buys,
-          col("click_id_user") === col("buy_id_user") &&
-          col("click_ts") >= col("buy_ts") - expr("INTERVAL 1 HOUR") &&
-          col("click_ts") <= col("buy_ts"))
-        .select(col("click_id"), col("buy_id"),
-          col("click_id_user").as("user_id"),
-          col("click_ts"), col("buy_ts"))
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (ds: org.apache.spark.sql.DataFrame, bid: Long) =>
-          BatchLanding.land(ds, outDir, bid)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamGate.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        val clicks = side("click", "click_id", "click_ts")
+        val buys = side("purchase", "buy_id", "buy_ts")
+        StreamGate.land(clicks.join(buys,
+            col("click_id_user") === col("buy_id_user") &&
+            col("click_ts") >= col("buy_ts") - expr("INTERVAL 1 HOUR") &&
+            col("click_ts") <= col("buy_ts"))
+          .select(col("click_id"), col("buy_id"),
+            col("click_id_user").as("user_id"),
+            col("click_ts"), col("buy_ts")),
+          ckpt, outDir)
       }
       BatchLanding.read(s, outDir).orderBy(col("click_id"), col("buy_id"))
     },
@@ -1019,39 +918,18 @@ object StreamingQueries {
         lit("flush").as("value_str"),
         lit(java.sql.Timestamp.valueOf("2035-01-01 00:00:00")).as("publish_time"),
         lit(java.sql.Timestamp.valueOf("2035-01-01 00:00:00")).as("event_time"))
-      def runPass(): Unit = {
-        StreamHarness.withShufflePartitions(s, "8") {
-          val src = s.readStream.format("pulsarlike")
-            .option("path", root)
-            .option("serviceUrl", "pulsar://local")
-            .option("topicNames", "events")
-            .option("subscriptionInitialPosition", "Earliest")
-            // single-batch-per-pass is the determinism contract of the
-            // sentinel choreography: a pass that splits would run its tail
-            // batch under the sentinel-advanced watermark and silently drop
-            // real rows. The limit must exceed any fixture size (10x soak
-            // included), so it is 1e8, not the 1e6 the plain loops use.
-            .option("batchingMaxMessages", "100000000")
-            .load()
+      def runPass(): Unit =
+        StreamGate.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          val src = StreamGate.stream(s, root, "events", SingleBatchCap).load()
             .withWatermark("event_time", "1 hour")
-          val q = src
-            .groupBy(window(col("event_time"), "1 hour"))
-            .agg(count(lit(1)).as("n"),
-              sum(expr("try_cast(key AS BIGINT)")).as("user_sum"))
-            .select(col("window.start").as("window_start"),
-              col("n"), col("user_sum"))
-            .writeStream
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-              BatchLanding.land(df, outDir, bid)
-              ()
-            }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          StreamGate.land(src
+              .groupBy(window(col("event_time"), "1 hour"))
+              .agg(count(lit(1)).as("n"),
+                sum(expr("try_cast(key AS BIGINT)")).as("user_sum"))
+              .select(col("window.start").as("window_start"),
+                col("n"), col("user_sum")),
+            ckpt, outDir, outputMode = "update")
         }
-      }
       TopicStore.publish(s,
         MessageOps.fromEvents(onTime.filter(col("ts") < mid)),
         root, "events", 4)
@@ -1099,29 +977,14 @@ object StreamingQueries {
       val ckpt = graft.TempRoots.create("graft-complete-ckpt")
       val outDir = root + "/totals"
       val events = Tables(s, dir, "events")
-      def runPass(): Unit = {
-        StreamHarness.withShufflePartitions(s, "8") {
-          val q = s.readStream.format("pulsarlike")
-            .option("path", root)
-            .option("serviceUrl", "pulsar://local")
-            .option("topicNames", "events")
-            .option("subscriptionInitialPosition", "Earliest")
-            .option("batchingMaxMessages", "1000000")
-            .load()
-            .groupBy(expr("try_cast(key AS BIGINT)").as("user_id"))
-            .agg(count(lit(1)).as("n"), max(col("event_time")).as("last_ts"))
-            .writeStream
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-              BatchLanding.land(df, outDir, bid)
-              ()
-            }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+      def runPass(): Unit =
+        StreamGate.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          StreamGate.land(
+            StreamGate.stream(s, root, "events", 1000000L).load()
+              .groupBy(expr("try_cast(key AS BIGINT)").as("user_id"))
+              .agg(count(lit(1)).as("n"), max(col("event_time")).as("last_ts")),
+            ckpt, outDir, outputMode = "complete")
         }
-      }
       TopicStore.publish(s,
         MessageOps.fromEvents(events.filter(pmod(col("event_id"), lit(2)) === 0)),
         root, "events", 4)
@@ -1217,27 +1080,13 @@ object StreamingQueries {
       val dim = Tables(s, dir, "customer")
         .select(col("c_custkey").cast("string").as("key"),
           col("c_mktsegment"))
-      StreamHarness.withShufflePartitions(s, "8") {
-        val q = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "events")
-          .option("subscriptionInitialPosition", "Earliest")
-          .option("batchingMaxMessages", "1000000")
-          .load()
-          .join(broadcast(dim), Seq("key"))
-          .select(col("message_id"), col("key"),
-            col("c_mktsegment").as("segment"))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-            BatchLanding.land(df, outDir, bid)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      StreamGate.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        StreamGate.land(
+          StreamGate.stream(s, root, "events", 1000000L).load()
+            .join(broadcast(dim), Seq("key"))
+            .select(col("message_id"), col("key"),
+              col("c_mktsegment").as("segment")),
+          ckpt, outDir)
       }
       BatchLanding.read(s, outDir).orderBy(col("message_id"))
     },
@@ -1279,15 +1128,13 @@ object StreamingQueries {
       val ckpt = graft.TempRoots.create("graft-tws-ckpt")
       val outDir = root + "/top2"
       val events = Tables(s, dir, "events")
-      def runPass(): Unit = StreamHarness.withShufflePartitions(s, "8") {
-        StreamHarness.withRocksDbStateStore(s) {
-          val src = s.readStream.format("pulsarlike")
-            .option("path", root)
-            .option("serviceUrl", "pulsar://local")
-            .option("topicNames", "events")
-            .option("subscriptionInitialPosition", "Earliest")
-            .option("batchingMaxMessages", "100000000")
-            .load()
+      // transformWithState requires the RocksDB state-store provider
+      def runPass(): Unit = StreamGate.withConf(s,
+          "spark.sql.shuffle.partitions" -> "8",
+          "spark.sql.streaming.stateStore.providerClass" ->
+            ("org.apache.spark.sql.execution.streaming.state." +
+              "RocksDBStateStoreProvider")) {
+          val src = StreamGate.stream(s, root, "events", SingleBatchCap).load()
           // the %5==4 family publishes as raw octet-stream (ps01's
           // parse contract) — parsed is NULL there, and a stateful op
           // over typed rows must drop them explicitly, not NPE
@@ -1298,22 +1145,12 @@ object StreamingQueries {
               col("parsed.value").cast("double").as("value"),
               col("parsed.event_id").cast("long").as("event_id"))
             .as[TwsEvent]
-          val q = parsed.groupByKey(_.user_id)
-            .transformWithState(new Top2Processor,
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              org.apache.spark.sql.streaming.OutputMode.Update())
-            .toDF()
-            .writeStream
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-              BatchLanding.land(df, outDir, bid)
-              ()
-            }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+          StreamGate.land(parsed.groupByKey(_.user_id)
+              .transformWithState(new Top2Processor,
+                org.apache.spark.sql.streaming.TimeMode.None(),
+                org.apache.spark.sql.streaming.OutputMode.Update())
+              .toDF(),
+            ckpt, outDir, outputMode = "update")
       }
       TopicStore.publish(s,
         MessageOps.fromEvents(events.filter(pmod(col("event_id"), lit(2)) === 0)),
@@ -1484,33 +1321,19 @@ object StreamingQueries {
           lit("flush").as("value_str"),
           lit(t).as("publish_time"), lit(t).as("event_time"))
       }
-      def runPass(): Unit = StreamHarness.withShufflePartitions(s, "8") {
-        val q = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "events")
-          .option("subscriptionInitialPosition", "Earliest")
-          // single batch per pass — the sentinel-choreography contract
-          .option("batchingMaxMessages", "100000000")
-          .load()
-          .withWatermark("event_time", "1 hour")
-          .dropDuplicatesWithinWatermark("message_id")
-          .groupBy(window(col("event_time"), "1 hour"))
-          .agg(count(lit(1)).as("n"),
-            sum(expr("try_cast(key AS BIGINT)")).as("user_sum"))
-          .select(col("window.start").as("window_start"), col("n"),
-            col("user_sum"))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-            BatchLanding.land(df, outDir, bid)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      def runPass(): Unit =
+        StreamGate.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          StreamGate.land(
+            StreamGate.stream(s, root, "events", SingleBatchCap).load()
+              .withWatermark("event_time", "1 hour")
+              .dropDuplicatesWithinWatermark("message_id")
+              .groupBy(window(col("event_time"), "1 hour"))
+              .agg(count(lit(1)).as("n"),
+                sum(expr("try_cast(key AS BIGINT)")).as("user_sum"))
+              .select(col("window.start").as("window_start"), col("n"),
+                col("user_sum")),
+            ckpt, outDir)
+        }
       TopicStore.publish(s, sentinel("2035-01-01 00:00:00"),
         root, "events", 4)
       runPass()
@@ -1591,14 +1414,8 @@ object StreamingQueries {
       // sf0.1 before this, ~3 s after
       val batchCap = math.max(200L,
         TopicStore.partitionMeta(root, "docs", 0)._1 / 4 + 1)
-      StreamHarness.withShufflePartitions(s, "8") {
-        val q0 = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "docs")
-          .option("subscriptionInitialPosition", "Earliest")
-          .option("batchingMaxMessages", batchCap.toString)
-          .load()
+      StreamGate.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        val q0 = StreamGate.stream(s, root, "docs", batchCap).load()
         // the topic is ONE partition by the ordering contract above, so
         // each micro-batch's source stage is a single task — and the
         // per-doc minhash pipeline below (3-gram explode, 8 md5 mins)
@@ -1637,16 +1454,7 @@ object StreamingQueries {
               ids.iterator.map(d => (d, mn < d))
             })
           .toDF("doc_id", "earlier")
-        val q = flagged.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-            BatchLanding.land(df, outDir, bid)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamGate.land(flagged, ckpt, outDir)
       }
       // per-doc flag = any band flagged; the 4 band rows per doc land
       // across whichever batches served them
@@ -1984,21 +1792,15 @@ object StreamingQueries {
   * exactly-once seam for non-idempotent sketch merges). Returns the
   * batch ids written this pass. */
 private[queries] object StreamKllShardGate {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.SparkSession
 
   def pass(s: SparkSession, root: String, ckpt: String,
       shardRoot: String, maxPerBatch: Long): Seq[Long] = {
     val batchIds =
       java.util.Collections.synchronizedList(
         new java.util.ArrayList[Long]())
-    StreamHarness.withShufflePartitions(s, "8") {
-      val raw = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", maxPerBatch.toString)
-        .load()
+    StreamGate.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      val raw = StreamGate.stream(s, root, "events", maxPerBatch).load()
       val parsed = MessageOps
         .contentTypeDispatch(raw, MessageOps.payloadSchema)
         .select(
@@ -2009,18 +1811,11 @@ private[queries] object StreamKllShardGate {
             expr("try_cast(split_part(value_str, ' ', 2) AS DOUBLE)"))
             .as("value"))
         .filter(col("event_type").isNotNull && col("value").isNotNull)
-      val q = parsed.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, bid: Long) =>
-          graft.operators.SketchOps.writeKllShard(df,
-            col("event_type"), col("value"), shardRoot, bid)
-          batchIds.add(bid)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamGate.run(parsed, ckpt) { (df, bid) =>
+        graft.operators.SketchOps.writeKllShard(df,
+          col("event_type"), col("value"), shardRoot, bid)
+        batchIds.add(bid)
+      }
     }
     import scala.jdk.CollectionConverters._
     batchIds.asScala.toSeq
@@ -2034,19 +1829,13 @@ private[queries] object StreamKllShardGate {
   * micro-batch's per-type theta sketches into the store at
   * `storePath`. Returns the number of merge batches run this pass. */
 private[queries] object StreamSketchGate {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.SparkSession
 
   def pass(s: SparkSession, root: String, ckpt: String,
       storePath: String, maxPerBatch: Long): Long = {
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-    StreamHarness.withShufflePartitions(s, "8") {
-      val raw = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", maxPerBatch.toString)
-        .load()
+    StreamGate.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      val raw = StreamGate.stream(s, root, "events", maxPerBatch).load()
       val parsed = MessageOps
         .contentTypeDispatch(raw, MessageOps.payloadSchema)
         .select(
@@ -2055,18 +1844,11 @@ private[queries] object StreamSketchGate {
             .as("event_type"),
           expr("try_cast(key AS BIGINT)").as("user_id"))
         .filter(col("event_type").isNotNull && col("user_id").isNotNull)
-      val q = parsed.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          graft.operators.SketchOps.mergeThetaIntoStore(df,
-            col("event_type"), col("user_id"), storePath)
-          batches.incrementAndGet()
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamGate.run(parsed, ckpt) { (df, _) =>
+        graft.operators.SketchOps.mergeThetaIntoStore(df,
+          col("event_type"), col("user_id"), storePath)
+        batches.incrementAndGet()
+      }
     }
     batches.get()
   }
@@ -2192,18 +1974,8 @@ private[queries] object StreamOuterJoinGate {
 
     val payloadSchema = MessageOps.payloadSchema
     def side(eventType: String, idAs: String, tsAs: String) = {
-      val raw = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        // single-batch-per-pass is the determinism contract of the
-        // sentinel choreography: a pass that splits would run its tail
-        // batch under the sentinel-advanced watermark and silently drop
-        // real rows. The limit must exceed any fixture size (10x soak
-        // included), so it is 1e8, not the 1e6 the plain loops use.
-        .option("batchingMaxMessages", "100000000")
-        .load()
+      val raw = StreamGate.stream(s, root, "events",
+        StreamingQueries.SingleBatchCap).load()
       MessageOps.contentTypeDispatch(raw, payloadSchema)
         .filter(col("parsed.event_type") === eventType)
         .select(
@@ -2229,9 +2001,9 @@ private[queries] object StreamOuterJoinGate {
       // discards anyway (the 2035 sentinels' own unmatched-outer
       // rows). Gated output is byte-identical; one full batch of
       // store ceremony per pass is saved.
-      StreamHarness.withConf(s,
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-      StreamHarness.withShufflePartitions(s, "4") {
+      StreamGate.withConf(s,
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "4") {
         val clicks = side("click", "click_id", "click_ts")
         val buys = side("purchase", "buy_id", "buy_ts")
         val joined = clicks.join(buys,
@@ -2257,17 +2029,7 @@ private[queries] object StreamOuterJoinGate {
               .select(col("window.start").as("window_start"),
                 col("n"), col("user_sum"))
           else projected
-        val q = out
-          .writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (ds: org.apache.spark.sql.DataFrame, bid: Long) =>
-            BatchLanding.land(ds, outDir, bid)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+        StreamGate.land(out, ckpt, outDir)
       }
     }
     runPass()
@@ -2345,36 +2107,15 @@ private[queries] object StreamingWindowGate {
       // every late row landed — 15 of 15 ws11 day rows over-counted).
       // The soj gate survives because its pass 2 only needs outer-row
       // FLUSH, which the commit-log watermark recovery provides.
-      StreamHarness.withShufflePartitions(s, "8") {
-        val src = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "events")
-          .option("subscriptionInitialPosition", "Earliest")
-          // single-batch-per-pass is the determinism contract of the
-          // sentinel choreography: a pass that splits would run its tail
-          // batch under the sentinel-advanced watermark and silently drop
-          // real rows. The limit must exceed any fixture size (10x soak
-          // included), so it is 1e8, not the 1e6 the plain loops use.
-          .option("batchingMaxMessages", "100000000")
-          .load()
+      StreamGate.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        val src = StreamGate.stream(s, root, "events",
+            StreamingQueries.SingleBatchCap).load()
           // observed BEFORE the watermark node: counts every delivered
           // row (late ones included) in the same pass as the work — the
           // per-stage invariant counter a 100 TB job emits for free
           .observe("ingest", count(lit(1)).as("rows_seen"))
           .withWatermark("event_time", "1 hour")
-        val q = agg(src)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: DataFrame, bid: Long) =>
-            BatchLanding.land(df, outDir, bid)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.recentProgress.foreach { p =>
+        StreamGate.land(agg(src), ckpt, outDir).foreach { p =>
           val om = p.observedMetrics
           if (om.containsKey("ingest")) observed += om.get("ingest").getLong(0)
           dropped += p.stateOperators.map(_.numRowsDroppedByWatermark).sum
@@ -2393,45 +2134,5 @@ private[queries] object StreamingWindowGate {
     runPass()
     (BatchLanding.read(s, outDir).orderBy(orderCols.map(col): _*),
       Counters(observed, dropped))
-  }
-}
-
-/** State-store-sized shuffle partitions for a stream loop's duration,
-  * restored afterwards even on failure. One definition — a hand-copied
-  * save/set/finally that forgets the restore would silently leak the
-  * override into every later query in the shared Verify/Bench session.
-  */
-private[queries] object StreamHarness {
-  def withShufflePartitions[T](s: org.apache.spark.sql.SparkSession,
-      n: String)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n)
-    try body
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Scoped session-conf override (same restore discipline). */
-  def withConf[T](s: org.apache.spark.sql.SparkSession, key: String,
-      v: String)(body: => T): T = {
-    val prev = util.Try(Option(s.conf.get(key))).toOption.flatten
-    s.conf.set(key, v)
-    try body
-    finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
-    }
-  }
-
-  /** transformWithState requires the RocksDB state-store provider —
-    * scoped to the gate's duration and restored even on failure, same
-    * discipline as the shuffle-partition override above. */
-  def withRocksDbStateStore[T](s: org.apache.spark.sql.SparkSession)
-      (body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try body
-    finally s.conf.set(key, prev)
   }
 }

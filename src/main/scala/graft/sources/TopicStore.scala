@@ -87,47 +87,72 @@ object TopicStore {
     }
   }
 
+  /** One parse of a partition's meta sidecar. `maxPt` is None for a
+    * meta written before time tracking; `tsorted` is then false, except
+    * for a partition with no meta at all (trivially sorted). */
+  private final case class Meta(count: Long, bytes: Long, base: Long,
+      maxPt: Option[Long], tsorted: Boolean,
+      index: Vector[(Long, Long)], txn: Map[String, Long]) {
+    def json: String = {
+      val timeJson = maxPt.fold("")(mp => s""""maxPt":$mp,"tsorted":$tsorted,""")
+      val idxJson = index.map { case (l, b) => s"[$l,$b]" }.mkString("[", ",", "]")
+      s"""{"count":$count,"bytes":$bytes,"base":$base,$timeJson""" +
+        s""""index":$idxJson,"txn":${txnJson(txn)}}"""
+    }
+  }
+
+  private def readMeta(dir: Path, p: Int): Meta = {
+    val m = dir.resolve(s"part-$p.meta")
+    if (!Files.exists(m)) Meta(0L, 0L, 0L, None, true, Vector.empty, Map.empty)
+    else {
+      val n = mapper.readTree(Files.readString(m))
+      def opt(k: String) = Option(n.get(k))
+      val maxPt = opt("maxPt").map(_.asLong())
+      Meta(
+        count = n.get("count").asLong(),
+        bytes = n.get("bytes").asLong(),
+        base = opt("base").fold(0L)(_.asLong()),
+        maxPt = maxPt,
+        tsorted = maxPt.isDefined && opt("tsorted").exists(_.asBoolean()),
+        index = opt("index").filter(_.isArray).fold(Vector.empty[(Long, Long)])(
+          _.elements().asScala.map(e => (e.get(0).asLong(), e.get(1).asLong())).toVector),
+        txn = opt("txn").filter(_.isObject).fold(Map.empty[String, Long])(
+          _.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap))
+    }
+  }
+
+  /** Replace `target` with `content` in one step: write a temp file
+    * beside it, then rename(2) it into place (ATOMIC_MOVE). Readers take
+    * no lock, so an in-place rewrite would let them see an empty or
+    * half-written file; this way they see the old file or the new one. */
+  private def writeAtomically(target: Path, content: String): Unit = {
+    val tmp = Files.createTempFile(target.getParent,
+      "." + target.getFileName.toString, ".tmp")
+    Files.writeString(tmp, content)
+    Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
   /** (count, bytes) per partition from the meta sidecar (O(1), no scan). */
   def partitionMeta(root: String, topic: String, p: Int): (Long, Long) =
     partitionMetaIn(topicDir(root, topic), p)
 
   def partitionMetaIn(dir: Path, p: Int): (Long, Long) = {
-    val m = dir.resolve(s"part-$p.meta")
-    if (!Files.exists(m)) (0L, 0L)
-    else {
-      val n = mapper.readTree(Files.readString(m))
-      (n.get("count").asLong(), n.get("bytes").asLong())
-    }
+    val m = readMeta(dir, p)
+    (m.count, m.bytes)
   }
 
   /** Sparse (line, byteOffset) index for a partition file — ascending,
     * one entry per `IndexStride` lines (empty for pre-index metas).
     * Line numbers are ABSOLUTE offsets; byte offsets are positions in
     * the current file (a truncated file starts at `partitionBaseIn`). */
-  def partitionIndexIn(dir: Path, p: Int): IndexedSeq[(Long, Long)] = {
-    val m = dir.resolve(s"part-$p.meta")
-    if (!Files.exists(m)) Vector.empty
-    else {
-      val n = mapper.readTree(Files.readString(m))
-      val idx = n.get("index")
-      if (idx == null || !idx.isArray) Vector.empty
-      else idx.elements().asScala
-        .map(e => (e.get(0).asLong(), e.get(1).asLong())).toVector
-    }
-  }
+  def partitionIndexIn(dir: Path, p: Int): IndexedSeq[(Long, Long)] =
+    readMeta(dir, p).index
 
   /** Producer-transaction high-waters persisted in the meta sidecar:
     * token ("queryId/writerPartition") → highest epochId whose append
     * was applied to this partition. See [[appendIn]]'s txn parameter. */
-  def partitionTxnIn(dir: Path, p: Int): Map[String, Long] = {
-    val m = dir.resolve(s"part-$p.meta")
-    if (!Files.exists(m)) Map.empty
-    else {
-      val t = mapper.readTree(Files.readString(m)).get("txn")
-      if (t == null || !t.isObject) Map.empty
-      else t.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-    }
-  }
+  def partitionTxnIn(dir: Path, p: Int): Map[String, Long] =
+    readMeta(dir, p).txn
 
   /** Publish-time high-water + sortedness flag for a partition:
     * (maxPt µs, tsorted). `tsorted` is TRUE only when every append so
@@ -138,29 +163,13 @@ object TopicStore {
     * silently mis-seeking. A fresh partition is trivially sorted; a
     * legacy meta without the field reports NOT-provably-sorted. */
   def partitionTimeMetaIn(dir: Path, p: Int): (Long, Boolean) = {
-    val m = dir.resolve(s"part-$p.meta")
-    if (!Files.exists(m)) (Long.MinValue, true)
-    else {
-      val n = mapper.readTree(Files.readString(m))
-      val mp = n.get("maxPt")
-      if (mp == null) (Long.MinValue, false)
-      else {
-        val ts = n.get("tsorted")
-        (mp.asLong(), ts != null && ts.asBoolean())
-      }
-    }
+    val m = readMeta(dir, p)
+    (m.maxPt.getOrElse(Long.MinValue), m.tsorted)
   }
 
   /** Absolute offset of the partition file's first line — non-zero once
     * the delivered prefix has been reclaimed (retry-log GC). */
-  def partitionBaseIn(dir: Path, p: Int): Long = {
-    val m = dir.resolve(s"part-$p.meta")
-    if (!Files.exists(m)) 0L
-    else {
-      val b = mapper.readTree(Files.readString(m)).get("base")
-      if (b == null) 0L else b.asLong()
-    }
-  }
+  def partitionBaseIn(dir: Path, p: Int): Long = readMeta(dir, p).base
 
   /** Durable subscription-cursor dir (the broker-side ack position):
     * `<topic>/.sub-<sub>/p<p>.cursor` holds the NEXT offset the
@@ -198,11 +207,7 @@ object TopicStore {
       if (next != cur) {
         val d = subDir(root, topic, sub)
         Files.createDirectories(d)
-        val tmp = Files.createTempFile(d, s".p$p", ".tmp")
-        Files.writeString(tmp, next.toString)
-        // ATOMIC_MOVE: rename(2) replaces the old cursor in one step
-        Files.move(tmp, d.resolve(s"p$p.cursor"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        writeAtomically(d.resolve(s"p$p.cursor"), next.toString)
       }
       next
     }
@@ -236,10 +241,7 @@ object TopicStore {
       val target = seekByTimeIn(dir, p, toUs)
       val d = subDir(root, topic, sub)
       Files.createDirectories(d)
-      val tmp = Files.createTempFile(d, s".p$p", ".tmp")
-      Files.writeString(tmp, target.toString)
-      Files.move(tmp, d.resolve(s"p$p.cursor"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      writeAtomically(d.resolve(s"p$p.cursor"), target.toString)
       target
     }
   }
@@ -499,29 +501,22 @@ object TopicStore {
       StandardOpenOption.CREATE, StandardOpenOption.WRITE)
     val lock = ch.lock()
     try {
+      val meta = readMeta(dir, p)
       // every append path carries existing high-waters forward — a plain
       // publish interleaved with a transactional sink must not wipe them
-      val txn0 = partitionTxnIn(dir, p)
       val replayed = txn.exists { case (tok, epoch) =>
-        txn0.get(tok).exists(_ >= epoch) }
+        meta.txn.get(tok).exists(_ >= epoch) }
       if (replayed) return
-      val txn1 = txn.fold(txn0) { case (tok, epoch) => txn0 + (tok -> epoch) }
-      val (base, bytes0) =
-        if (Files.exists(metaFile)) {
-          val n = mapper.readTree(Files.readString(metaFile))
-          (n.get("count").asLong(), n.get("bytes").asLong())
-        } else (0L, 0L)
       val index = Vector.newBuilder[(Long, Long)]
-      index ++= partitionIndexIn(dir, p)
+      index ++= meta.index
       // publish-time monotonicity tracking (see partitionTimeMetaIn):
       // an append below the high-water marks the partition unsorted —
       // STICKY, so time-ordered optimizations refuse it forever after
-      val (maxPt0, sorted0) = partitionTimeMetaIn(dir, p)
-      var maxPt = maxPt0
-      var tsorted = sorted0
+      var maxPt = meta.maxPt.getOrElse(Long.MinValue)
+      var tsorted = meta.tsorted
       val sb = new StringBuilder
-      var off = base
-      var bytes = bytes0
+      var off = meta.count
+      var bytes = meta.bytes
       msgs.foreach { m0 =>
         val m = if (m0.messageId != null) m0
           else m0.copy(messageId = s"0:$off:$p:0")
@@ -536,14 +531,9 @@ object TopicStore {
       }
       Files.writeString(dataFile, sb.toString,
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-      val lineBase = partitionBaseIn(dir, p)
-      val idxJson = index.result()
-        .map { case (l, b) => s"[$l,$b]" }.mkString("[", ",", "]")
-      Files.writeString(metaFile,
-        s"""{"count":$off,"bytes":$bytes,"base":$lineBase,""" +
-          s""""maxPt":$maxPt,"tsorted":$tsorted,""" +
-          s""""index":$idxJson,"txn":${txnJson(txn1)}}""",
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+      writeAtomically(metaFile, meta.copy(count = off, bytes = bytes,
+        maxPt = Some(maxPt), tsorted = tsorted, index = index.result(),
+        txn = txn.fold(meta.txn)(meta.txn + _)).json)
     } finally { lock.release(); ch.close() }
     }
   }
@@ -579,9 +569,9 @@ object TopicStore {
         StandardOpenOption.CREATE, StandardOpenOption.WRITE)
       val lock = ch.lock()
       try {
-        val (count, _) = partitionMetaIn(dir, p)
-        val base = partitionBaseIn(dir, p)
-        val newBase = math.min(math.max(upTo, base), count)
+        val meta = readMeta(dir, p)
+        val base = meta.base
+        val newBase = math.min(math.max(upTo, base), meta.count)
         if (newBase == base) return
         // streamed rewrite (never loads the log in memory) into a temp
         // file, then an atomic move — a reader racing the rename sees
@@ -610,20 +600,12 @@ object TopicStore {
         Files.move(tmp, dataFile,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        val idxJson = index.result()
-          .map { case (l, b) => s"[$l,$b]" }.mkString("[", ",", "]")
         // retention must not forget producer-epoch high-waters: wiping
         // them would let a replayed epoch duplicate after a truncation.
         // Time meta carries forward too (a prefix drop cannot unsort a
         // sorted log; an unsorted flag stays conservatively sticky).
-        val (mp, ts) = partitionTimeMetaIn(dir, p)
-        val timeJson =
-          if (mp == Long.MinValue) ""
-          else s""""maxPt":$mp,"tsorted":$ts,"""
-        Files.writeString(metaFile,
-          s"""{"count":$count,"bytes":$bytes,"base":$newBase,$timeJson""" +
-            s""""index":$idxJson,"txn":${txnJson(partitionTxnIn(dir, p))}}""",
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+        writeAtomically(metaFile, meta.copy(bytes = bytes, base = newBase,
+          index = index.result()).json)
       } finally { lock.release(); ch.close() }
     }
   }
@@ -658,9 +640,10 @@ object TopicStore {
   def readEntries(dir: Path, p: Int, from: Long, until: Long): Vector[Msg] = {
     val f = dir.resolve(s"part-$p.jsonl")
     if (!Files.exists(f) || until <= from) return Vector.empty
-    val (idxLine, idxByte) = partitionIndexIn(dir, p)
+    val meta = readMeta(dir, p)
+    val (idxLine, idxByte) = meta.index
       .takeWhile(_._1 <= from).lastOption
-      .getOrElse((partitionBaseIn(dir, p), 0L))
+      .getOrElse((meta.base, 0L))
     val ch = java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
     try {
       ch.position(idxByte)
@@ -690,10 +673,10 @@ object TopicStore {
     * every retained message is older, the base when none is. */
   def seekByTimeIn(dir: Path, p: Int, tUs: Long): Long = {
     val f = dir.resolve(s"part-$p.jsonl")
-    val base = partitionBaseIn(dir, p)
-    val (cnt, _) = partitionMetaIn(dir, p)
-    if (!Files.exists(f) || cnt <= base) return base
-    val entries = ((base, 0L) +: partitionIndexIn(dir, p))
+    val meta = readMeta(dir, p)
+    val base = meta.base
+    if (!Files.exists(f) || meta.count <= base) return base
+    val entries = ((base, 0L) +: meta.index)
       .filter(_._1 >= base).distinct.sortBy(_._1)
     val ch = java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
     try {

@@ -34,14 +34,9 @@ object TopicStats {
         (t, p, base, logEnd)
       }
     }.toDF("topic", "partition", "base_offset", "log_end")
-    val msgs = spark.read.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("topicNames", topics.mkString(","))
-      .option("subscriptionInitialPosition", "Earliest")
-      // stats scan admits everything in one logical read; the batch
-      // policy is mandatory on the consumer surface (A11), so state it
-      .option("batchingMaxMessages", "1000000000")
+    // stats scan admits everything in one logical read; the batch
+    // policy is mandatory on the consumer surface (A11), so state it
+    val msgs = StreamGate.batch(spark, root, topics.mkString(","), 1000000000L)
       .load()
       .select(col("topic"),
         // message_id layout: ledger:offset:partition:batch

@@ -21,16 +21,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchRescueSpec extends AnyFunSuite {
 
   /** A run thunk replaying a fixed timing sequence. */
-  private def replay(xs: Double*): () => Double = {
+  private def replay(xs: Double*): () => Option[Double] = {
     val it = Iterator(xs: _*)
-    () => it.next()
+    () => Some(it.next())
   }
 
   test("clean triple: no rescue, plain median") {
     val (med, extra) =
       Bench.measureWithRescue(3, replay(1.0, 1.1, 1.2), fresh = None)
     assert(extra == 0)
-    assert(med == 1.1)
+    assert(med.contains(1.1))
   }
 
   test("two pressured reps of three: 2x-of-min trigger, rescue restores the clean median") {
@@ -40,7 +40,7 @@ class BenchRescueSpec extends AnyFunSuite {
       3, replay(1.0, 9.0, 8.0, 1.1, 1.2), fresh = None)
     assert(extra == 2)
     // full set [1.0, 9.0, 8.0, 1.1, 1.2] -> sorted [1.0,1.1,1.2,8.0,9.0]
-    assert(med == 1.2)
+    assert(med.contains(1.2))
   }
 
   test("fresh-median trigger fires even when in-run reps agree with each other") {
@@ -51,7 +51,7 @@ class BenchRescueSpec extends AnyFunSuite {
     assert(extra == 2)
     // [1.0, 1.1, 5.0, 5.1, 5.2] -> median 5.0: still honest (majority
     // of observations were slow), but the extra reps are in the record
-    assert(med == 5.0)
+    assert(med.contains(5.0))
   }
 
   test("genuinely slow query cannot rescue itself into a fast number") {
@@ -59,7 +59,7 @@ class BenchRescueSpec extends AnyFunSuite {
     val (med, extra) = Bench.measureWithRescue(
       3, replay(5.0, 5.1, 5.2, 5.0, 5.1), fresh = Some(1.0))
     assert(extra == 2)
-    assert(med >= 5.0)
+    assert(med.exists(_ >= 5.0))
   }
 
   test("sub-floor queries are never rescued") {
@@ -75,7 +75,16 @@ class BenchRescueSpec extends AnyFunSuite {
     val (med, extra) = Bench.measureWithRescue(
       3, replay(1.0, 2.1, 2.2, 1.05, 999.0), fresh = None)
     assert(extra == 1)
-    assert(math.abs(med - 1.575) < 1e-9)
+    assert(math.abs(med.get - 1.575) < 1e-9)
+  }
+
+  test("a failed rep is left out of the median; all failed means no median") {
+    val it = Iterator(Some(1.0), None, Some(1.2))
+    val (med, extra) = Bench.measureWithRescue(3, () => it.next(), fresh = None)
+    assert(extra == 0)
+    assert(med.contains(1.1))
+    val (none, _) = Bench.measureWithRescue(3, () => None, fresh = Some(1.0))
+    assert(none.isEmpty)
   }
 
   test("freshMedians parses the committed bench_fresh.json shape") {
@@ -133,8 +142,9 @@ class BenchRescueSpec extends AnyFunSuite {
     try {
       // pressure holds for the base reps AND every rescue rep — the
       // round-8 driver shape (q38 at 10.7x with rescues exhausted)
-      val (med, _) = Bench.measureWithRescue(
-        3, () => work(), fresh = Some(freshMed))
+      val (rescued, _) = Bench.measureWithRescue(
+        3, () => Some(work()), fresh = Some(freshMed))
+      val med = rescued.get
       // only assert the annotation when the host actually delivered
       // sustained pressure (a very wide box could absorb the burners)
       if (med > 2.0 * freshMed)
@@ -177,16 +187,17 @@ class BenchRescueSpec extends AnyFunSuite {
       t
     }
     var calls = 0
-    val rep: () => Double = () => {
+    val rep: () => Option[Double] = () => {
       calls += 1
       val dt = work()
       // pressure vanishes after the second rep — the round-5/6/7
       // driver mechanism (transient host pressure on one rep window)
       if (calls == 2) { on.set(false); burners.foreach(_.join(2000)) }
-      dt
+      Some(dt)
     }
-    val (rescuedMed, extra) =
+    val (rescued, extra) =
       Bench.measureWithRescue(3, rep, fresh = Some(freshMed))
+    val rescuedMed = rescued.get
     // re-measure fresh AFTER the run: the fresh reference for the bound
     // is whichever unpressured phase ran slower, so ambient drift of the
     // host between phases can't fail the test (the pressured reps are

@@ -70,10 +70,9 @@ object CatalogGen {
       out ++= s"\n## $fam (${qs.size})\n\n"
       out ++= "| query | contract | anchor |\n|---|---|---|\n"
       qs.foreach { q =>
-        val ln = lines.indexWhere(_.contains("\"" + q.name + "\"")) + 1
         val oracle = if (q.oracle.isEmpty) " *(rows-only)*" else ""
         out ++= s"| `${q.name}`$oracle | ${contract(lines, q.name)} " +
-          s"| $file:$ln |\n"
+          s"| $file |\n"
         total += 1
       }
     }
